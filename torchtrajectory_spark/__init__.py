@@ -23,4 +23,10 @@ Python appears only inside Arrow-batched UDFs (tokenize, codec, WAND loop).
 
 __version__ = "0.1.0"
 
+# first import inside a Spark task = this worker's first engine UDF:
+# stop the per-task zip re-reads there (see zipguard)
+from .zipguard import install_on_worker as _install_zip_guard  # noqa: E402
+
+_install_zip_guard()
+
 from .engine import Engine  # noqa: E402,F401  (public facade)

@@ -75,25 +75,22 @@ def _bool_index_blocks(spark, index_dir: str, query_terms: list[str],
                        mode: str, buckets: int | None = None) -> DataFrame:
     """Segment-local boolean retrieval straight from compressed blocks.
 
-    One ``applyInPandas`` group per segment decodes ONLY the query terms'
-    docID streams (bucket+term predicates pushed to the parquet scan —
-    same pruning as the WAND path) and computes the union / intersection
-    with numpy set ops. Segments are doc-disjoint, so per-segment results
-    concatenate with no global distinct — the flat-rows formulation paid
-    a decode-explode stage plus a corpus-keyed shuffle for the same
-    answer. Salted sub-lists of a hot term union naturally (np.unique).
+    One segment-aligned ``mapInPandas`` task per segment group
+    (:func:`wand.score_segments`) decodes ONLY the query terms' docID
+    streams (bucket+term row-group pruning, same as the WAND path) and
+    computes the union / intersection with numpy set ops. Segments are
+    doc-disjoint, so per-segment results concatenate with no global
+    distinct — the flat-rows formulation paid a decode-explode stage
+    plus a corpus-keyed shuffle for the same answer. Salted sub-lists of
+    a hot term union naturally (np.unique).
     """
-    import numpy as np  # noqa: F401 (sorted_isin operands)
     import pandas as pd
 
     from .index import sorted_isin, tombstone_ids
-    from .wand import _q_blocks
+    from .wand import score_segments
 
     q = sorted({str(t) for t in query_terms})
     nq = len(q)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "doc_gaps"
-    )
     dead = tombstone_ids(index_dir)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -104,9 +101,8 @@ def _bool_index_blocks(spark, index_dir: str, query_terms: list[str],
             out = out[~sorted_isin(dead, out)]  # tombstone mask
         return pd.DataFrame({"doc_id": out})
 
-    return blocks.groupBy("segment").applyInPandas(
-        run, schema="doc_id bigint"
-    )
+    return score_segments(spark, index_dir, q, run, "doc_id bigint",
+                          columns=("term", "doc_gaps"), buckets=buckets)
 
 
 def decode_match_docs(pdf, mode: str, nq: int):

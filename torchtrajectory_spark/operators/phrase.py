@@ -29,12 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import codec
-from .index import (
-    bucket_of,
-    decode_positions,
-    read_index_config,
-    read_postings,
-)
+from .index import decode_positions, read_index_config
 from .stats import tokenized
 
 
@@ -383,31 +378,10 @@ def near_count_index(spark: SparkSession, index_dir: str,
     cfg = read_index_config(index_dir)
     if not cfg.get("with_positions"):
         raise ValueError(f"index at {index_dir} has no positions")
-    if buckets is None:
-        buckets = int(cfg["buckets"])
-    q = sorted(set(terms))
-    bks = sorted({bucket_of(t, buckets) for t in q})
-    blocks = (
-        read_postings(spark, index_dir)
-        .where(F.col("bucket").isin(bks))
-        .where(F.col("term").isin(q))
-        .select("segment", "term", "doc_gaps", "tfs", "poss")
-    )
-    from .index import sorted_isin, tombstone_ids
-
-    dead = tombstone_ids(index_dir)
     tq = list(terms)
     s = int(slop)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        r = _segment_near(pdf.drop(columns=["segment"]), tq, s)
-        if dead is not None and len(r):
-            r = r[~sorted_isin(dead, r["doc_id"].to_numpy())]  # tombstones
-        return r
-
-    return blocks.groupBy("segment").applyInPandas(
-        run, schema="doc_id bigint, n_occ bigint",
-    )
+    return _occurrence_index(spark, index_dir, tq, buckets,
+                             lambda blk: _segment_near(blk, tq, s))
 
 
 def _segment_phrase(pdf: pd.DataFrame, phrase: list[str]) -> pd.DataFrame:
@@ -458,29 +432,30 @@ def phrase_count_index(spark: SparkSession, index_dir: str,
     cfg = read_index_config(index_dir)
     if not cfg.get("with_positions"):
         raise ValueError(f"index at {index_dir} has no positions")
-    if buckets is None:
-        buckets = int(cfg["buckets"])
-    q = sorted(set(phrase))
-    bks = sorted({bucket_of(t, buckets) for t in q})
-    blocks = (
-        read_postings(spark, index_dir)
-        .where(F.col("bucket").isin(bks))
-        .where(F.col("term").isin(q))
-        .select("segment", "term", "doc_gaps", "tfs", "poss")
-    )
+    return _occurrence_index(spark, index_dir, phrase, buckets,
+                             lambda blk: _segment_phrase(blk, phrase))
+
+
+def _occurrence_index(spark: SparkSession, index_dir: str, terms: list[str],
+                      buckets: int | None, occurrences) -> DataFrame:
+    """(doc_id, n_occ) of a positional per-segment kernel
+    ``occurrences(blocks)`` over the query terms' blocks, tombstones
+    masked — the shared plan of the phrase and proximity counts."""
     from .index import sorted_isin, tombstone_ids
+    from .wand import score_segments
 
     dead = tombstone_ids(index_dir)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        r = _segment_phrase(pdf.drop(columns=["segment"]), phrase)
+        r = occurrences(pdf)
         if dead is not None and len(r):
             r = r[~sorted_isin(dead, r["doc_id"].to_numpy())]  # tombstones
         return r
 
-    return blocks.groupBy("segment").applyInPandas(
-        run, schema="doc_id bigint, n_occ bigint",
-    )
+    return score_segments(spark, index_dir, terms, run,
+                          "doc_id bigint, n_occ bigint",
+                          columns=("term", "doc_gaps", "tfs", "poss"),
+                          buckets=buckets)
 
 
 def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
@@ -516,7 +491,7 @@ def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
     from ..config import BM25_B, BM25_K1, DEFAULT_K
     from ..functions.bm25 import idf_py, tf_sat_expr
     from .index import sorted_isin, tombstone_ids
-    from .wand import query_term_meta
+    from .wand import merge_topk, query_term_meta, score_segments
 
     k1 = BM25_K1 if k1 is None else float(k1)
     b = BM25_B if b is None else float(b)
@@ -532,13 +507,6 @@ def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
     meta = query_term_meta(spark, index_dir, q, buckets)
     idf_total = float(sum(idf_py(meta.term_df.get(t, 0.0), meta.n_docs)
                           for t in phrase))
-    bks = sorted({bucket_of(t, buckets) for t in q})
-    blocks = (
-        read_postings(spark, index_dir)
-        .where(F.col("bucket").isin(bks))
-        .where(F.col("term").isin(q))
-        .select("segment", "term", "doc_gaps", "tfs", "poss", "dls")
-    )
     dead = tombstone_ids(index_dir)
     t0 = min(q, key=lambda t: meta.term_df.get(t, 0.0))  # rarest term
 
@@ -570,14 +538,13 @@ def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
                              "n_occ": r["n_occ"].to_numpy(),
                              "dl": dls[pos].astype(np.int64)})
 
-    per_seg = blocks.groupBy("segment").applyInPandas(
-        run, schema="doc_id bigint, n_occ bigint, dl bigint",
-    )
+    per_seg = score_segments(
+        spark, index_dir, q, run, "doc_id bigint, n_occ bigint, dl bigint",
+        columns=("term", "doc_gaps", "tfs", "poss", "dls"), buckets=buckets)
     scored = per_seg.select(
         "doc_id",
         (F.lit(idf_total) * tf_sat_expr(
             F.col("n_occ").cast("double"), F.col("dl").cast("double"),
             meta.avgdl, k1, b)).alias("score"),
     )
-    return (scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(int(k)))
+    return merge_topk(scored, k)

@@ -27,20 +27,19 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, DEFAULT_K
 from ..functions.bm25 import idf_py, tf_sat_np
 from .index import tombstone_ids
 from .wand import (
     _EMPTY_TOPK,
+    _TOPK_SCHEMA,
     IndexMeta,
     _build_term_arrays,
-    _q_blocks,
+    merge_topk,
     query_term_meta,
+    score_segments,
 )
-
-_TOPK_SCHEMA = "doc_id bigint, score double"
 
 
 def _live_union_docs(use: dict, blocked: np.ndarray | None) -> np.ndarray:
@@ -112,23 +111,12 @@ def topk_bm25_index_msm(
             f"min_should_match={m} out of range 1..{len(q)} for {q!r}")
     if meta is None:
         meta = query_term_meta(spark, index_dir, q, buckets)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
     dead = tombstone_ids(index_dir)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_topk_msm(
-            pdf.drop(columns=["segment"]), q, m, k, meta, k1, b,
-            blocked=dead,
-        )
-
-    per_seg = blocks.groupBy("segment").applyInPandas(
-        run, schema=_TOPK_SCHEMA,
-    )
-    return (per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(int(k)))
+    return merge_topk(score_segments(
+        spark, index_dir, q,
+        lambda pdf: _segment_topk_msm(pdf, q, m, k, meta, k1, b,
+                                      blocked=dead),
+        _TOPK_SCHEMA, buckets=buckets), k)
 
 
 def _segment_topk_synonym(pdf: pd.DataFrame, groups: list[list[str]],
@@ -199,20 +187,9 @@ def topk_bm25_index_synonym(
                meta.n_docs)
         for g in groups
     ]
-    blocks = _q_blocks(spark, index_dir, all_terms, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
     dead = tombstone_ids(index_dir)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_topk_synonym(
-            pdf.drop(columns=["segment"]), groups, gidf, k, meta, k1, b,
-            blocked=dead,
-        )
-
-    per_seg = blocks.groupBy("segment").applyInPandas(
-        run, schema=_TOPK_SCHEMA,
-    )
-    return (per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(int(k)))
+    return merge_topk(score_segments(
+        spark, index_dir, all_terms,
+        lambda pdf: _segment_topk_synonym(pdf, groups, gidf, k, meta, k1, b,
+                                          blocked=dead),
+        _TOPK_SCHEMA, buckets=buckets), k)

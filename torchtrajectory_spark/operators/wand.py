@@ -5,9 +5,10 @@ Distributed re-expression of T-Torch's flagship top-k scan
 
 reference (single JVM)                      -> this engine (Spark)
 --------------------------------------------------------------------------
-posting probe per query edge  (J1)          -> parquet scan filtered to
-                                               query terms + their crc32
-                                               buckets (partition pruning)
+posting probe per query edge  (J1)          -> in-task parquet read of
+                                               the row groups whose stats
+                                               admit the query terms + their
+                                               crc32 buckets
 UB(doc) = sum of matched term weights (A2)  -> per-segment numpy UB
                                                accumulation from block-max
                                                metadata (idf * tf_sat(max_tf,
@@ -22,11 +23,14 @@ heap pop                      (T7)          -> per-segment top-k ->
                                                TakeOrderedAndProject merge,
                                                (score DESC, doc_id ASC)
 
-The index is doc-sharded into segments; each segment task runs the whole
-pruned scan locally over numpy arrays (one ``applyInPandas`` group per
-segment), then Spark merges the tiny per-segment top-k lists. At 10^12-file
-scale parallelism = number of segments; no stage ever materializes more
-than the query terms' postings for one segment.
+The index is doc-sharded into segments; each segment runs the whole
+pruned scan locally over numpy arrays, then Spark merges the tiny
+per-segment top-k lists. The plan is segment-aligned and exchange-free
+(:func:`score_segments`): ONE ``mapInPandas`` stage over a local relation
+of the committed segments' postings files, each task reading its own
+segments' query-bucket row groups with pyarrow. At 10^12-file scale
+parallelism = number of segments; no task ever materializes more than the
+query terms' postings for one segment, and no block crosses a shuffle.
 """
 
 from __future__ import annotations
@@ -128,15 +132,16 @@ def query_term_meta(spark: SparkSession, index_dir: str,
     if buckets is None:
         buckets = int(read_index_config(index_dir)["buckets"])
     bks = sorted({bucket_of(t, buckets) for t in q})
-    dfs = (
-        read_terms(spark, index_dir)
-        .where(F.col("bucket").isin(bks))
-        .where(F.col("term").isin(q))
-        .groupBy("term").agg(F.sum("df").alias("df"))
-        .collect()
-    )
+    # the per-segment (term, df) partials — at most |q| x segments rows —
+    # sum on the driver: one scan stage, no exchange for a groupBy
+    dfs: dict = {}
+    for r in (read_terms(spark, index_dir)
+              .where(F.col("bucket").isin(bks))
+              .where(F.col("term").isin(q))
+              .select("term", "df").collect()):
+        dfs[r["term"]] = dfs.get(r["term"], 0) + r["df"]
     return IndexMeta(n_docs, avgdl,
-                     {r["term"]: min(float(r["df"]), n_docs) for r in dfs})
+                     {t: min(float(df), n_docs) for t, df in dfs.items()})
 
 
 def _q_blocks(spark: SparkSession, index_dir: str, q: list[str],
@@ -150,6 +155,105 @@ def _q_blocks(spark: SparkSession, index_dir: str, q: list[str],
         .where(F.col("bucket").isin(bks))
         .where(F.col("term").isin(q))
     )
+
+
+# block columns of the BM25 kernels (bound metadata + payloads)
+SCORE_COLS = ("term", "n_docs", "max_tf", "min_dl", "doc_gaps", "tfs", "dls")
+
+
+def segment_files(spark: SparkSession, index_dir: str) -> dict[int, list]:
+    """Committed segment -> its postings file URIs, from the cached
+    postings plan: the same segment snapshot as ``read_terms`` /
+    ``read_doc_stats``, dropped by ``invalidate_index_cache``. With no
+    committed segment the plan raises the historical PATH_NOT_FOUND."""
+    files: dict[int, list] = {}
+    for f in read_postings(spark, index_dir).inputFiles():
+        seg = int(re.search(r"/segment=(\d+)/[^/]*$", f).group(1))
+        files.setdefault(seg, []).append(f)
+    return dict(sorted(files.items()))
+
+
+def query_row_groups(files: list, bks: list[int], q: list[str]) -> list:
+    """Parquet row groups (pyarrow fragments) of ``files`` whose bucket
+    AND term statistics admit a query bucket and a query term — the
+    row-group pruning Spark's parquet scan did with the same pushed
+    predicates (Spark also prunes pages by column index, pyarrow does
+    not). ORs of ``==``: pyarrow does not prune by statistics with
+    ``is_in`` on strings, or on int32 against int64 values."""
+    import functools
+    import operator
+
+    import pyarrow.dataset as pads
+    import pyarrow.fs as pafs
+
+    def any_eq(col, values):
+        return functools.reduce(operator.or_,
+                                (pads.field(col) == v for v in values))
+
+    if not q:
+        return []
+    admits = any_eq("bucket", bks) & any_eq("term", q)
+    fmt = pads.ParquetFileFormat()
+    out = []
+    for f in files:
+        fs, path = pafs.FileSystem.from_uri(f)
+        out.extend(fmt.make_fragment(path, fs).split_by_row_group(admits))
+    return out
+
+
+def read_query_blocks(files: list, bks: list[int], q: list[str],
+                      columns) -> pd.DataFrame:
+    """One segment's query-term blocks, read inside the task with
+    pyarrow from the row groups :func:`query_row_groups` keeps."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    cols = list(columns)
+    keep = pads.field("bucket").isin(bks) & pads.field("term").isin(q)
+    tables = [rg.to_table(columns=cols, filter=keep)
+              for rg in query_row_groups(files, bks, q)]
+    if not tables:
+        return pd.DataFrame(columns=cols)
+    return pa.concat_tables(tables).to_pandas()
+
+
+def score_segments(spark: SparkSession, index_dir: str, q: list[str],
+                   kernel, schema: str, columns=SCORE_COLS,
+                   buckets: int | None = None) -> DataFrame:
+    """Segment-aligned, exchange-free per-segment scoring: the one plan
+    behind every plain indexed query.
+
+    The committed segments' file lists become a local relation (built
+    from pandas through Arrow — no Python stage of its own) and ONE
+    ``mapInPandas`` stage runs over it; each task reads its own
+    segments' query-bucket postings with pyarrow
+    (:func:`read_query_blocks`) and applies ``kernel`` (blocks pdf ->
+    result pdf) per segment that holds any of them. No hash exchange on
+    ``segment``: a single-query top-k merges through
+    TakeOrderedAndProject in the same stage, one job per query."""
+    q = sorted(set(q))
+    if buckets is None:
+        buckets = int(read_index_config(index_dir)["buckets"])
+    bks = sorted({bucket_of(t, buckets) for t in q})
+    segs = segment_files(spark, index_dir)
+
+    def run(batches):
+        for pdf in batches:
+            for files in pdf["files"]:
+                blocks = read_query_blocks(list(files), bks, q, columns)
+                if len(blocks):
+                    yield kernel(blocks)
+
+    rel = spark.createDataFrame(
+        pd.DataFrame({"segment": list(segs), "files": list(segs.values())}),
+        "segment int, files array<string>")
+    return rel.mapInPandas(run, schema)
+
+
+def merge_topk(per_seg: DataFrame, k: int) -> DataFrame:
+    """Global (score DESC, doc_id ASC) top-k of per-segment lists."""
+    return (per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+            .limit(int(k)))
 
 
 class _TermPostings:
@@ -224,6 +328,7 @@ def _build_term_arrays(pdf: pd.DataFrame, idf: dict, avgdl: float,
 
 _EMPTY_TOPK = {"doc_id": pd.Series(dtype="int64"),
                "score": pd.Series(dtype="float64")}
+_TOPK_SCHEMA = "doc_id bigint, score double"
 
 
 def _scan_topk(term_arrays: dict, q: list[str], idf: dict, k: int,
@@ -268,8 +373,7 @@ def _scan_topk(term_arrays: dict, q: list[str], idf: dict, k: int,
             if allowed.size else np.zeros(cand.size, dtype=bool)
         cand, ubs = cand[keep], ubs[keep]
         if cand.size == 0:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
+            return pd.DataFrame(_EMPTY_TOPK)
     # UB(doc) = sum of per-term block-max bounds (reference A2)
     uniq, inv = np.unique(cand, return_inverse=True)
     ub_sum = np.zeros(uniq.size, dtype=np.float64)
@@ -439,30 +543,13 @@ def topk_bm25_index(
             raise ValueError(f"topk_bm25_index: boosts must be > 0: {bad}")
     if meta is None:
         meta = query_term_meta(spark, index_dir, q, buckets, scalars)
-    # column-prune before the Arrow transfer: the scorer needs only the
-    # block payloads + bound metadata, not salt/block_id/first/last/bucket
-    # (ReadSchema shrinks accordingly — checked in EXPLAIN.md)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
-
     dead = tombstone_ids(index_dir)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_topk(
-            pdf.drop(columns=["segment"]), q, k, meta, k1, b, blocked=dead,
-            after=after, boosts=boosts,
-        )
-
-    per_seg = blocks.groupBy("segment").applyInPandas(
-        lambda key_pdf: run(key_pdf),
-        schema="doc_id bigint, score double",
-    )
-    return (
-        per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
+    per_seg = score_segments(
+        spark, index_dir, q,
+        lambda pdf: _segment_topk(pdf, q, k, meta, k1, b, blocked=dead,
+                                  after=after, boosts=boosts),
+        _TOPK_SCHEMA, buckets=buckets)
+    return merge_topk(per_seg, k)
 
 
 def scores_bm25_index_all(
@@ -484,21 +571,11 @@ def scores_bm25_index_all(
     q = sorted(set(str(t) for t in query_terms))
     if meta is None:
         meta = query_term_meta(spark, index_dir, q, buckets, scalars)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
     dead = tombstone_ids(index_dir)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_scores_all(
-            pdf.drop(columns=["segment"]), q, meta, k1, b, blocked=dead
-        )
-
-    return blocks.groupBy("segment").applyInPandas(
-        lambda key_pdf: run(key_pdf),
-        schema="doc_id bigint, score double",
-    )
+    return score_segments(
+        spark, index_dir, q,
+        lambda pdf: _segment_scores_all(pdf, q, meta, k1, b, blocked=dead),
+        _TOPK_SCHEMA, buckets=buckets)
 
 
 def topk_bm25_index_many(
@@ -520,16 +597,16 @@ def topk_bm25_index_many(
     score-identical to ``topk_bm25_index`` run alone (tested). The win
     over a per-query loop is structural, not incidental:
 
-    * ONE postings scan covers the union of all queries' terms
-      (bucket+term pushed filters, one job instead of one per query);
+    * ONE postings read covers the union of all queries' terms
+      (bucket+term row-group pruning, one job instead of one per query);
     * ONE term-meta lookup job for all terms;
     * within each segment task every term's blocks are decoded ONCE and
       shared across the queries that reference it (reference workloads'
       query sets share hot terms heavily);
-    * ONE Python stage launch total — the fixed ~0.4 s local-mode Arrow
-      stage cost (BASELINE.md "latency floor") is paid once for Q
-      queries instead of Q times, and on a cluster the scheduler sees
-      one wave of segment tasks instead of Q waves.
+    * ONE Python stage total — the fixed per-stage cost (BASELINE.md
+      "latency floor") is paid once for Q queries instead of Q times,
+      and on a cluster the scheduler sees one wave of segment tasks
+      instead of Q waves.
 
     The reference evaluates its query set as a driver-side loop over
     ``findTopK`` (``base/invertedIndex/EdgeInvertedIndex.java:102``);
@@ -539,17 +616,21 @@ def topk_bm25_index_many(
     ``afters`` maps query_id -> (score, doc_id) cursor: per-query
     searchAfter pagination inside the batch — mixed page-1 and page-N
     members share the one scan and the one decode, each at its own
-    page-one cost.
+    page-one cost. Keys coerce with ``str()`` like the query ids; a key
+    that is not a query id raises ``ValueError``.
     """
-    qmap = [(str(qid), sorted(set(str(t) for t in terms)))
-            for qid, terms in sorted(queries.items())]
+    qmap = sorted((str(qid), sorted(set(str(t) for t in terms)))
+                  for qid, terms in queries.items())
+    if afters:
+        afters = {str(qid): cur for qid, cur in afters.items()}
+        unknown = sorted(set(afters) - {qid for qid, _ in qmap})
+        if unknown:
+            raise ValueError(
+                f"topk_bm25_index_many: afters keys are not query ids: "
+                f"{unknown}")
     all_terms = sorted({t for _, q in qmap for t in q})
     if meta is None:
         meta = query_term_meta(spark, index_dir, all_terms, buckets, scalars)
-    blocks = _q_blocks(spark, index_dir, all_terms, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
 
     out_schema = "query_id string, doc_id bigint, score double"
     dead = tombstone_ids(index_dir)
@@ -565,6 +646,8 @@ def topk_bm25_index_many(
             .where(predicate)
             .select("segment", "doc_id")
         )
+        blocks = _q_blocks(spark, index_dir, all_terms, buckets).select(
+            "segment", *SCORE_COLS)
 
         def run_filtered(blk: pd.DataFrame, alw: pd.DataFrame) -> pd.DataFrame:
             ids = np.sort(alw["doc_id"].to_numpy(dtype=np.int64))
@@ -577,15 +660,11 @@ def topk_bm25_index_many(
             allowed_df.groupBy("segment")
         ).applyInPandas(run_filtered, schema=out_schema)
     else:
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _segment_topk_many(
-                pdf.drop(columns=["segment"]), qmap, k, meta, k1, b,
-                blocked=dead, afters=afters,
-            )
-
-        per_seg = blocks.groupBy("segment").applyInPandas(
-            lambda key_pdf: run(key_pdf), schema=out_schema
-        )
+        per_seg = score_segments(
+            spark, index_dir, all_terms,
+            lambda pdf: _segment_topk_many(pdf, qmap, k, meta, k1, b,
+                                           blocked=dead, afters=afters),
+            out_schema, buckets=buckets)
     # per-query merge of the tiny per-segment lists: Q x segments x k
     # rows through one window — the same (score DESC, doc_id ASC)
     # tie-break as the single-query TakeOrderedAndProject
@@ -639,10 +718,7 @@ def topk_bm25_index_filtered(
         .select("segment", "doc_id")
     )
     blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
-
+        "segment", *SCORE_COLS)
     dead = tombstone_ids(index_dir)
 
     def run(blk: pd.DataFrame, alw: pd.DataFrame) -> pd.DataFrame:
@@ -654,11 +730,8 @@ def topk_bm25_index_filtered(
 
     per_seg = blocks.groupBy("segment").cogroup(
         allowed.groupBy("segment")
-    ).applyInPandas(run, schema="doc_id bigint, score double")
-    return (
-        per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
+    ).applyInPandas(run, schema=_TOPK_SCHEMA)
+    return merge_topk(per_seg, k)
 
 
 def topk_bm25_index_boolean(
@@ -696,25 +769,20 @@ def topk_bm25_index_boolean(
     if meta is None:
         meta = query_term_meta(spark, index_dir, sq, buckets)
     all_terms = sorted(set(sq) | set(sm) | set(sn))
-    blocks = _q_blocks(spark, index_dir, all_terms, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
     dead = tombstone_ids(index_dir)
     n_must = len(sm)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         from .boolean import decode_match_docs
 
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
         allowed = None
         if sm:
             allowed = decode_match_docs(
                 pdf[pdf["term"].isin(sm)], "and", n_must
             )
             if allowed is None or allowed.size == 0:
-                return empty  # a must term absent / nothing matches all
+                # a must term absent / nothing matches all
+                return pd.DataFrame(_EMPTY_TOPK)
         blocked = dead
         neg = pdf[pdf["term"].isin(sn)]
         if len(neg):
@@ -722,18 +790,11 @@ def topk_bm25_index_boolean(
             if banned is not None:
                 blocked = (banned if blocked is None
                            else np.union1d(blocked, banned))
-        return _segment_topk(
-            pdf[pdf["term"].isin(sq)].drop(columns=["segment"]),
-            sq, k, meta, k1, b, allowed=allowed, blocked=blocked,
-        )
+        return _segment_topk(pdf[pdf["term"].isin(sq)], sq, k, meta, k1, b,
+                             allowed=allowed, blocked=blocked)
 
-    per_seg = blocks.groupBy("segment").applyInPandas(
-        run, schema="doc_id bigint, score double"
-    )
-    return (
-        per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
+    return merge_topk(score_segments(spark, index_dir, all_terms, run,
+                                     _TOPK_SCHEMA, buckets=buckets), k)
 
 
 def explain_score(spark: SparkSession, index_dir: str, terms: list[str],
@@ -1180,12 +1241,12 @@ def _topk_expansion(spark, index_dir, dfs_factory, k, *, buckets, k1, b,
     if meta is None:
         dfs = dfs_factory()
         if not dfs:
-            return spark.createDataFrame([], "doc_id bigint, score double")
+            return spark.createDataFrame([], _TOPK_SCHEMA)
         n_docs, avgdl = (scalars if scalars is not None
                          else _corpus_scalars(spark, index_dir))
         meta = IndexMeta(n_docs, avgdl, dfs)
     elif not meta.term_df:
-        return spark.createDataFrame([], "doc_id bigint, score double")
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     return topk_bm25_index(
         spark, index_dir, sorted(meta.term_df), k,
         meta=meta, buckets=buckets, k1=k1, b=b,

@@ -155,6 +155,15 @@ def test_find_topk_plan_touches_only_query_buckets(spark, engine, tmp_path):
     bk = bucket_of("spark", 8)
     files = segment_files(spark, eng.index_dir)
     assert sorted(files) == [0, 1]
+    # the segments as the engine wrote them: a one-term query keeps a
+    # strict subset of each segment's row groups (the many-row-group
+    # case at the writer's own row-group size is
+    # test_engine_written_postings_prune_by_row_group)
+    for seg_files in files.values():
+        held = sum(pq.ParquetFile(f.removeprefix("file://")).num_row_groups
+                   for f in seg_files)
+        kept = query_row_groups(seg_files, [bucket_of("join", 8)], ["join"])
+        assert 0 < len(kept) < held, (len(kept), held)
     rewritten = []
     for i, f in enumerate(files[0]):
         t = pq.read_table(f.removeprefix("file://"))
@@ -183,6 +192,56 @@ def test_find_topk_plan_touches_only_query_buckets(spark, engine, tmp_path):
     assert len(got) == want.num_rows > 0
     assert set(got["term"]) == {"spark"}
     assert sorted(got["doc_gaps"]) == sorted(want["doc_gaps"].to_pylist())
+
+
+def test_engine_written_postings_prune_by_row_group(spark, tmp_path):
+    """The engine writes postings in row groups of ``ROW_GROUP_BYTES``,
+    so on files it wrote itself the in-task reader keeps only the row
+    groups whose bucket/term statistics admit the query: for a rare term
+    and a hot salted one, a small share of a 4,000-doc segment's row
+    groups and bytes, and still every one of the term's blocks."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from torchtrajectory_spark.operators.index import build_index, bucket_of
+    from torchtrajectory_spark.operators.wand import (
+        SCORE_COLS,
+        query_row_groups,
+        read_query_blocks,
+        segment_files,
+    )
+    from torchtrajectory_spark.sources.corpus import gen_rows
+
+    docs = spark.createDataFrame(
+        gen_rows(np.arange(4000, dtype=np.int64))[["doc_id", "content"]])
+    d = str(tmp_path / "idx")
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")  # two postings files of ~0.8 MB
+    try:
+        build_index(spark, docs, d, id_col="doc_id", text_col="content",
+                    analyzer="code", n_segments=1, buckets=64)
+    finally:
+        spark.conf.set(key, prev)
+    (files,) = segment_files(spark, d).values()
+    paths = [f.removeprefix("file://") for f in files]
+    mds = [pq.ParquetFile(p).metadata for p in paths]
+    held = sum(md.num_row_groups for md in mds)
+    held_bytes = sum(md.row_group(i).total_byte_size
+                     for md in mds for i in range(md.num_row_groups))
+    assert held >= 4 * len(files), held
+    full = pq.read_table(paths)
+    for term in ("id_7", "return"):
+        kept = query_row_groups(files, [bucket_of(term, 64)], [term])
+        kept_bytes = sum(rg.row_groups[0].total_byte_size for rg in kept)
+        assert 0 < len(kept) <= 2 * len(files), (term, len(kept), held)
+        assert kept_bytes < held_bytes / 3, (term, kept_bytes, held_bytes)
+        want = full.filter(pc.equal(full["term"], term))
+        got = read_query_blocks(files, [bucket_of(term, 64)], [term],
+                                SCORE_COLS)
+        assert len(got) == want.num_rows > 0, term
+        assert sorted(got["doc_gaps"]) == sorted(want["doc_gaps"].to_pylist())
 
 
 def test_blockmax_skips_payload_decode_on_skewed_corpus(spark, tmp_path):

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, DEFAULT_K
-from .wand import merge_topk, scores_bm25_index_all
 
 
 def topk_bm25_fielded(
@@ -48,6 +47,8 @@ def topk_bm25_fielded(
     """Top-k by boosted multi-field BM25. ``fields`` maps a field name
     to (index_dir, boost); every query term queries every field with
     that field's own statistics. Returns (doc_id, score)."""
+    from .wand import scores_bm25_index_all
+
     if not fields:
         raise ValueError("topk_bm25_fielded: no fields")
     parts = [
@@ -68,5 +69,8 @@ def combine_fielded(parts: list[tuple[DataFrame, float]],
         for df, w in parts
     ]
     u = reduce(DataFrame.unionAll, boosted)
-    return merge_topk(u.groupBy("doc_id").agg(F.sum("score").alias("score")),
-                      k)
+    return (
+        u.groupBy("doc_id").agg(F.sum("score").alias("score"))
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        .limit(int(k))
+    )

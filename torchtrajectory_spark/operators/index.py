@@ -1302,12 +1302,18 @@ def read_index_config(index_dir: str) -> dict:
         return json.load(f)
 
 
+# row-group target: the query path's pyarrow read prunes by row-group
+# statistics only, so sorted files need small row groups to prune at all
+ROW_GROUP_BYTES = 128 << 10
+
+
 def _atomic_write_parquet(df: DataFrame, path: str) -> None:
     """Write-then-rename for atomic per-segment commit."""
     tmp = path + ".__tmp__"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
-    df.write.mode("overwrite").parquet(tmp)
+    (df.write.mode("overwrite")
+     .option("parquet.block.size", ROW_GROUP_BYTES).parquet(tmp))
     if os.path.exists(path):
         shutil.rmtree(path)
     os.replace(tmp, path)

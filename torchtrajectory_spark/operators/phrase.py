@@ -13,10 +13,11 @@ Two physical strategies (results identical, both oracle-checked):
 
 * corpus-direct: tokens array + ``filter(sequence(...))`` — a single scan,
   the whole predicate stays in Catalyst codegen.
-* index-backed: decode the phrase terms' positional postings (only their
-  partition-pruned buckets), per-segment numpy position-list intersection
-  inside ``applyInPandas``; segments are doc-disjoint so the union is the
-  answer.
+* index-backed: decode the phrase terms' positional postings (only the
+  row groups whose bucket/term statistics admit them, read inside the
+  task by ``wand.score_segments``), per-segment numpy position-list
+  intersection in the same ``mapInPandas`` task; segments are
+  doc-disjoint so the union is the answer.
 """
 
 from __future__ import annotations

@@ -33,13 +33,14 @@ from ..functions.bm25 import idf_py, tf_sat_np
 from .index import tombstone_ids
 from .wand import (
     _EMPTY_TOPK,
-    _TOPK_SCHEMA,
     IndexMeta,
     _build_term_arrays,
     merge_topk,
     query_term_meta,
     score_segments,
 )
+
+_TOPK_SCHEMA = "doc_id bigint, score double"
 
 
 def _live_union_docs(use: dict, blocked: np.ndarray | None) -> np.ndarray:

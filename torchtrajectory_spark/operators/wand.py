@@ -175,11 +175,12 @@ def segment_files(spark: SparkSession, index_dir: str) -> dict[int, list]:
 
 def query_row_groups(files: list, bks: list[int], q: list[str]) -> list:
     """Parquet row groups (pyarrow fragments) of ``files`` whose bucket
-    AND term statistics admit a query bucket and a query term — the
-    row-group pruning Spark's parquet scan did with the same pushed
-    predicates (Spark also prunes pages by column index, pyarrow does
-    not). ORs of ``==``: pyarrow does not prune by statistics with
-    ``is_in`` on strings, or on int32 against int64 values."""
+    AND term statistics admit a query bucket and a query term. pyarrow
+    prunes by row group only (no page index), so this is as fine as the
+    files' row groups: the engine writes bucket/term-sorted postings in
+    row groups of ``index.ROW_GROUP_BYTES`` for it. ORs of ``==``:
+    pyarrow does not prune by statistics with ``is_in`` on strings, or
+    on int32 against int64 values."""
     import functools
     import operator
 
@@ -328,7 +329,6 @@ def _build_term_arrays(pdf: pd.DataFrame, idf: dict, avgdl: float,
 
 _EMPTY_TOPK = {"doc_id": pd.Series(dtype="int64"),
                "score": pd.Series(dtype="float64")}
-_TOPK_SCHEMA = "doc_id bigint, score double"
 
 
 def _scan_topk(term_arrays: dict, q: list[str], idf: dict, k: int,
@@ -373,7 +373,8 @@ def _scan_topk(term_arrays: dict, q: list[str], idf: dict, k: int,
             if allowed.size else np.zeros(cand.size, dtype=bool)
         cand, ubs = cand[keep], ubs[keep]
         if cand.size == 0:
-            return pd.DataFrame(_EMPTY_TOPK)
+            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
+                                 "score": pd.Series(dtype="float64")})
     # UB(doc) = sum of per-term block-max bounds (reference A2)
     uniq, inv = np.unique(cand, return_inverse=True)
     ub_sum = np.zeros(uniq.size, dtype=np.float64)
@@ -548,7 +549,7 @@ def topk_bm25_index(
         spark, index_dir, q,
         lambda pdf: _segment_topk(pdf, q, k, meta, k1, b, blocked=dead,
                                   after=after, boosts=boosts),
-        _TOPK_SCHEMA, buckets=buckets)
+        "doc_id bigint, score double", buckets=buckets)
     return merge_topk(per_seg, k)
 
 
@@ -575,7 +576,7 @@ def scores_bm25_index_all(
     return score_segments(
         spark, index_dir, q,
         lambda pdf: _segment_scores_all(pdf, q, meta, k1, b, blocked=dead),
-        _TOPK_SCHEMA, buckets=buckets)
+        "doc_id bigint, score double", buckets=buckets)
 
 
 def topk_bm25_index_many(
@@ -718,7 +719,10 @@ def topk_bm25_index_filtered(
         .select("segment", "doc_id")
     )
     blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", *SCORE_COLS)
+        "segment", "term", "n_docs", "max_tf", "min_dl",
+        "doc_gaps", "tfs", "dls",
+    )
+
     dead = tombstone_ids(index_dir)
 
     def run(blk: pd.DataFrame, alw: pd.DataFrame) -> pd.DataFrame:
@@ -730,8 +734,11 @@ def topk_bm25_index_filtered(
 
     per_seg = blocks.groupBy("segment").cogroup(
         allowed.groupBy("segment")
-    ).applyInPandas(run, schema=_TOPK_SCHEMA)
-    return merge_topk(per_seg, k)
+    ).applyInPandas(run, schema="doc_id bigint, score double")
+    return (
+        per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        .limit(k)
+    )
 
 
 def topk_bm25_index_boolean(
@@ -775,14 +782,15 @@ def topk_bm25_index_boolean(
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         from .boolean import decode_match_docs
 
+        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
+                              "score": pd.Series(dtype="float64")})
         allowed = None
         if sm:
             allowed = decode_match_docs(
                 pdf[pdf["term"].isin(sm)], "and", n_must
             )
             if allowed is None or allowed.size == 0:
-                # a must term absent / nothing matches all
-                return pd.DataFrame(_EMPTY_TOPK)
+                return empty  # a must term absent / nothing matches all
         blocked = dead
         neg = pdf[pdf["term"].isin(sn)]
         if len(neg):
@@ -793,8 +801,9 @@ def topk_bm25_index_boolean(
         return _segment_topk(pdf[pdf["term"].isin(sq)], sq, k, meta, k1, b,
                              allowed=allowed, blocked=blocked)
 
-    return merge_topk(score_segments(spark, index_dir, all_terms, run,
-                                     _TOPK_SCHEMA, buckets=buckets), k)
+    return merge_topk(score_segments(
+        spark, index_dir, all_terms, run, "doc_id bigint, score double",
+        buckets=buckets), k)
 
 
 def explain_score(spark: SparkSession, index_dir: str, terms: list[str],
@@ -1241,12 +1250,12 @@ def _topk_expansion(spark, index_dir, dfs_factory, k, *, buckets, k1, b,
     if meta is None:
         dfs = dfs_factory()
         if not dfs:
-            return spark.createDataFrame([], _TOPK_SCHEMA)
+            return spark.createDataFrame([], "doc_id bigint, score double")
         n_docs, avgdl = (scalars if scalars is not None
                          else _corpus_scalars(spark, index_dir))
         meta = IndexMeta(n_docs, avgdl, dfs)
     elif not meta.term_df:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return spark.createDataFrame([], "doc_id bigint, score double")
     return topk_bm25_index(
         spark, index_dir, sorted(meta.term_df), k,
         meta=meta, buckets=buckets, k1=k1, b=b,
